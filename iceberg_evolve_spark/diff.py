@@ -11,9 +11,9 @@ Reference surface: ``FieldChange`` / ``SchemaDiff`` (``iceberg_evolve/diff.py``)
   (``diff.py:270-324``): renames → type/doc updates → adds → drops → moves, because a
   move (or nested op) referencing a not-yet-renamed column would fail.
 
-The minimal-move computation (``diff.py:183-208``) uses a longest-common-subsequence
-(:class:`difflib.SequenceMatcher`) over the old/new field-ID orders so that a single
-insertion doesn't flag every subsequent field as moved.
+The minimal-move computation (``diff.py:183-208``) keeps a longest increasing
+subsequence of the common fields' new positions, so that a single insertion doesn't
+flag every subsequent field as moved and no smaller set of moves exists.
 
 Beyond reference parity, :meth:`SchemaDiff.from_schemas` can also detect
 required/optional flips (``include_required_changes=True``) — the reference silently
@@ -22,8 +22,8 @@ ignores these (``SURVEY.md §1.1``); default off for parity.
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from dataclasses import dataclass, field as dc_field
-from difflib import SequenceMatcher
 from typing import TYPE_CHECKING
 
 from iceberg_evolve_spark.canonical import clean_type_str, types_equivalent
@@ -77,13 +77,28 @@ class FieldChange:
 
 
 def minimal_moves(orig: list[int], new: list[int]) -> list[int]:
-    """IDs that must move to turn ``orig`` into ``new`` — the complement of the
-    longest common subsequence (reference ``diff.py:183-196``)."""
-    matcher = SequenceMatcher(a=orig, b=new, autojunk=False)
+    """IDs that must move to turn ``orig`` into ``new`` — the complement of a
+    longest common subsequence (reference ``diff.py:183-196``). Both orders
+    hold distinct IDs, so that is a longest increasing subsequence of the new
+    positions in ``orig`` order, found by patience sorting in O(n log n)."""
+    pos = {fid: i for i, fid in enumerate(new)}
+    seq = [pos[fid] for fid in orig if fid in pos]
+    tails: list[int] = []  # tails[k]: least end position of a run of k + 1
+    ends: list[int] = []  # index into seq of that run's last element
+    prev = [-1] * len(seq)
+    for i, p in enumerate(seq):
+        k = bisect_left(tails, p)
+        if k == len(tails):
+            tails.append(p)
+            ends.append(i)
+        else:
+            tails[k], ends[k] = p, i
+        prev[i] = ends[k - 1] if k else -1
     stable: set[int] = set()
-    for tag, i1, i2, _j1, _j2 in matcher.get_opcodes():
-        if tag == "equal":
-            stable.update(orig[i1:i2])
+    i = ends[-1] if ends else -1
+    while i >= 0:
+        stable.add(new[seq[i]])
+        i = prev[i]
     return [fid for fid in new if fid not in stable]
 
 

@@ -18,27 +18,44 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Driver heap past which more memory stopped helping: parts_pagerank at sf1
+#: went >560 s (GCLocker retries) on the 1g default and 29.7 s at 16g.
+HEAP_KNEE_MB = 16 << 10
+
+
+def default_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    count — containers and ``taskset`` narrow it)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_mem() -> str:
+    """Driver heap from physical RAM: half of ``MemTotal`` (the JVM's
+    off-heap buffers, Python workers and the page cache share the rest),
+    capped at :data:`HEAP_KNEE_MB`."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{min(kb // 2048, HEAP_KNEE_MB)}m"
+
 
 def get_session(
     app_name: str = "iceberg-evolve-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     return (
         SparkSession.builder.master(master)
         .appName(app_name)
         # local[N] runs driver and executors in ONE JVM: the default 1g heap
-        # that is fine at sf0.1 collapses into GC thrash at sf1 (32 threads
-        # sharing shuffle/codegen buffers). The box has 128 GiB; 16g is the
-        # measured knee — parts_pagerank at sf1 went >560 s (GCLocker
-        # retries) on the default and 29.7 s at 16g. Only effective at JVM
-        # launch; a pre-existing session keeps its heap.
+        # that is fine at sf0.1 collapses into GC thrash at sf1 (N threads
+        # sharing shuffle/codegen buffers). Only effective at JVM launch; a
+        # pre-existing session keeps its heap.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")

@@ -102,10 +102,13 @@ def _table_ddl(table_path: str) -> str:
     parquet footer (KB-scale driver read)."""
     import pyarrow.parquet as pq
 
-    entries = _log(table_path)
+    from iceberg_evolve_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(table_path)
+    entries = t.versions()
     if not entries:
         raise FileNotFoundError(f"no snapshots at {table_path}")
-    files = _entry_files(table_path, entries[-1])
+    files = t._entry_abs_files(entries[-1])
     if not files:
         raise FileNotFoundError(f"snapshot has no data files: {table_path}")
     schema = pq.ParquetFile(files[0]).schema_arrow
@@ -120,34 +123,10 @@ def _table_ddl(table_path: str) -> str:
 
 
 def _log(table_path: str) -> list[dict]:
-    """The table's snapshot log: checkpoint + atomically-linked commit-file
-    tail — the same assembly as ``SnapshotTable.versions()`` (round 12's
-    lock-free commit plane), inlined here so the streaming source stays a
-    self-contained driver-side reader."""
-    try:
-        with open(os.path.join(table_path, "_snapshots.json")) as fh:
-            entries = json.load(fh)
-    except FileNotFoundError:
-        entries = []
-    v = (int(entries[-1]["version"]) if entries else 0) + 1
-    while True:
-        try:
-            with open(
-                os.path.join(table_path, f"c{v:05d}.commit.json")
-            ) as fh:
-                entries.append(json.load(fh))
-        except FileNotFoundError:
-            return entries
-        v += 1
+    """The table's checked snapshot log (``SnapshotTable.versions()``)."""
+    from iceberg_evolve_spark.sources.snapshots import SnapshotTable
 
-
-def _entry_files(table_path: str, entry: dict) -> list[str]:
-    dd = os.path.join(table_path, entry["data_dir"])
-    out = []
-    for mname in entry.get("manifests", []):
-        with open(os.path.join(table_path, mname)) as fh:
-            out.extend(os.path.join(dd, rel) for rel in json.load(fh)["files"])
-    return out
+    return SnapshotTable(table_path).versions()
 
 
 def _manifest_files(table_path: str, entry: dict, mnames) -> list[tuple]:
@@ -218,7 +197,7 @@ def _added_files(
         if v <= start_v or v > end_v:
             continue
         e = by_v[v]
-        cur = set(e.get("manifests", []))
+        cur = set(e["manifests"])
         if prev is None:
             if v != first_v or start_v != 0:
                 # a gap below v with a non-zero checkpoint would re-emit
@@ -245,7 +224,7 @@ def _added_files(
             out.extend(_manifest_files(table_path, e, cur))
             prev = e
             continue
-        prev_m = set(prev.get("manifests", []))
+        prev_m = set(prev["manifests"])
         is_append = (
             prev_m <= cur
             and e.get("rollback_of") is None

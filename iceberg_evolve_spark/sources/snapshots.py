@@ -38,17 +38,18 @@ Disciplines (the same ones real table formats automate):
   never O(table files). Readers assemble a snapshot's file list from its
   manifests and scan exactly those files, so uncommitted files in the dir
   (crash orphans) are invisible — Iceberg's shared ``data/`` prefix model.
-  (Format 1 — one hard-link forest per append — paid O(table files) links
-  per commit; VERDICT r9 "What's wrong" 1. Legacy entries without a
-  ``manifests`` key still read via directory walk.)
+* **The log holds one entry format.** Every entry carries ``fmt ==
+  SNAPSHOT_FORMAT``, its ``manifests``, its lineage ``base_seq`` and a
+  ``seq`` on each delete descriptor. :meth:`SnapshotTable.versions` checks
+  this once where the log is loaded and raises ``ValueError`` otherwise;
+  every reader indexes the stamped fields directly.
 * **The snapshot log is the commit point.** Data files land first (stage
-  write + per-file atomic rename), then the manifest file (atomic replace),
-  and only then does ``_snapshots.json`` gain the entry — installed
-  atomically via write-temp + ``os.replace``. A crash at any step leaves
+  write + per-file atomic rename), then the manifest file (atomic link),
+  and only then is the entry published as its version's commit file via
+  the ``os.link`` compare-and-swap above. A crash at any step leaves
   either the old log (new files are unreferenced orphans, reclaimed by
   retention's sweep) or the new one (commit complete). No torn state is
-  observable. Single-writer protocol: concurrent committers need an external
-  lock, as with table formats lacking a catalog's compare-and-swap.
+  observable, and concurrent committers need no external lock.
 * **Rollback is logical.** Rolling back appends a new entry pointing at the
   old version's manifest list (stamped ``rollback_of`` so changelog scans
   can refuse ambiguous ranges) — history is preserved and the rollback is
@@ -91,9 +92,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_snapshots.json"
 
-#: sentinel: `_commit(entries)` without a CAS check (legacy full replace)
-_UNCHECKED = object()
-
 
 class CommitConflict(RuntimeError):
     """Another writer advanced the snapshot log under this commit and the
@@ -116,10 +114,27 @@ def delete_stack_keys(entry: dict) -> "set[str]":
     unchanged), which a length compare misclassifies as a plain append."""
     return {json.dumps(d, sort_keys=True) for d in entry.get("deletes", [])}
 
-#: Manifest format stamped on new snapshot entries. Format 2 = manifest file
-#: lists (this module's current write path); entries without the stamp (and
-#: without a ``manifests`` key) are format 1 and read via directory walk.
+#: Manifest format stamped on every snapshot entry: manifest file lists.
+#: The only format this module reads (see :func:`_checked_entry`).
 SNAPSHOT_FORMAT = 2
+
+
+def _checked_entry(entry: dict) -> dict:
+    """The one check on snapshot-log input: ``entry`` carries every stamp
+    the readers index directly. Raises ``ValueError`` naming the version
+    and the missing fields."""
+    missing = [k for k in ("manifests", "base_seq") if k not in entry]
+    if entry.get("fmt") != SNAPSHOT_FORMAT:
+        missing.insert(0, f"fmt == {SNAPSHOT_FORMAT}")
+    if any("seq" not in d for d in entry.get("deletes", [])):
+        missing.append("seq on a delete")
+    if missing:
+        raise ValueError(
+            f"snapshot log entry v{entry.get('version')} lacks "
+            f"{', '.join(missing)} — not a format-{SNAPSHOT_FORMAT} log"
+        )
+    return entry
+
 
 #: Delete files at/below this on-disk size are force-broadcast in the
 #: merge-on-read anti-joins (KB-scale CDC deletes: keeps the scan a single
@@ -294,11 +309,11 @@ class SnapshotTable:
         return int(ck[-1]["version"]) if ck else 0
 
     def versions(self) -> list[dict]:
-        """Ordered snapshot entries: ``{version, data_dir, manifests, ts,
-        note, ...}`` (format-1 entries lack ``manifests``). Assembled from
-        the checkpoint plus the contiguous commit-file tail above its head
-        (see module docstring) — O(tail) KB-scale JSON reads; retention
-        folds the tail back into the checkpoint."""
+        """Ordered snapshot entries: ``{version, data_dir, fmt, manifests,
+        base_seq, ts, note, ...}``, each checked by :func:`_checked_entry`.
+        Assembled from the checkpoint plus the contiguous commit-file tail
+        above its head (see module docstring) — O(tail) KB-scale JSON
+        reads; retention folds the tail back into the checkpoint."""
         entries = self._checkpoint_entries()
         v = (int(entries[-1]["version"]) if entries else 0) + 1
         while True:
@@ -306,7 +321,7 @@ class SnapshotTable:
                 with open(self._commit_file(v)) as fh:
                     entries.append(json.load(fh))
             except FileNotFoundError:
-                return entries
+                return [_checked_entry(e) for e in entries]
             v += 1
 
     def _link_commit(self, entry: dict) -> None:
@@ -339,27 +354,13 @@ class SnapshotTable:
                 pass
             raise _LinkRaced(f"checkpoint advanced past v{v}")
 
-    def _commit(self, entries: list[dict], expected_head=_UNCHECKED) -> None:
-        """Install ``entries`` as the snapshot log. With ``expected_head``
+    def _commit(self, entries: list[dict], expected_head: int) -> None:
+        """COMPARE-AND-SWAP append of ``entries`` past ``expected_head``
         (the head version the caller read before building its change; 0 =
-        empty log) this is a COMPARE-AND-SWAP append: every entry past the
-        expected head is published as an atomically-linked commit file, so
-        a concurrent writer makes the first link fail and
-        :class:`CommitConflict` is raised — nothing committed is ever
-        replaced. Unchecked callers (deliberate history REWRITES: tests
-        forcing a log shape, crash simulations) force-replace the
-        checkpoint and clear this scope's commit tail — explicitly
-        single-writer, as before."""
-        if expected_head is _UNCHECKED:
-            cre = self._commit_file_re()
-            for name in os.listdir(self.path):
-                if cre.fullmatch(name):
-                    os.unlink(os.path.join(self.path, name))
-            tmp = self._manifest_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(entries, fh, indent=1)
-            os.replace(tmp, self._manifest_path())  # atomic on POSIX
-            return
+        empty log): every entry past the expected head is published as an
+        atomically-linked commit file, so a concurrent writer makes the
+        first link fail and :class:`CommitConflict` is raised — nothing
+        committed is ever replaced."""
         cur = self.versions()
         head = cur[-1]["version"] if cur else 0
         if head != expected_head:
@@ -446,8 +447,8 @@ class SnapshotTable:
         head = fresh[-1]
         if head["version"] == cur["version"]:
             return head  # fast path: nothing moved
-        cm = set(cur.get("manifests") or [])
-        hm = set(head.get("manifests") or [])
+        cm = set(cur["manifests"])
+        hm = set(head["manifests"])
         conflicting = any(
             e.get("rollback_of") is not None
             or e.get("rewrite")
@@ -504,7 +505,7 @@ class SnapshotTable:
         return name
 
     def _entry_files(self, entry: dict) -> list[str]:
-        """Data files of a format-2 snapshot (relative to its lineage dir),
+        """Data files of a snapshot (relative to its lineage dir),
         assembled from its manifest list — O(#manifests + #files) metadata
         reads, never a directory walk of shared storage."""
         out: list[str] = []
@@ -516,20 +517,6 @@ class SnapshotTable:
     def _entry_abs_files(self, entry: dict) -> list[str]:
         dd = os.path.join(self.path, entry["data_dir"])
         return [os.path.join(dd, rel) for rel in self._entry_files(entry)]
-
-    def _synth_base_manifest(self, entry: dict) -> str:
-        """One-time upgrade of a format-1 snapshot the next commit builds on:
-        list its data dir into a manifest file (``-base`` suffix). The legacy
-        entry itself is untouched; only the NEW entry references the synth."""
-        dd = os.path.join(self.path, entry["data_dir"])
-        return self._write_manifest_file(
-            entry["version"], _walk_rel_parquet(dd), suffix="-base"
-        )
-
-    def _manifests_of(self, entry: dict) -> list[str]:
-        """Manifest list of ``entry``, synthesizing one for format-1."""
-        got = entry.get("manifests")
-        return list(got) if got else [self._synth_base_manifest(entry)]
 
     # -- per-snapshot schema tracking (round 12) ------------------------------
     #
@@ -562,7 +549,7 @@ class SnapshotTable:
         entry["schema_id"] = sid
         entry["schemas"] = dict(src["schemas"])
         entry["manifest_schemas"] = {
-            m: known.get(m, sid) for m in entry.get("manifests", [])
+            m: known.get(m, sid) for m in entry["manifests"]
         }
         return entry
 
@@ -861,7 +848,7 @@ class SnapshotTable:
                 "data_dir": head["data_dir"],
                 "fmt": SNAPSHOT_FORMAT,
                 "manifests": list(head["manifests"]),
-                "base_seq": head.get("base_seq", head["version"]),
+                "base_seq": head["base_seq"],
                 "ts": time.time() if ts is None else ts,
                 "note": note or f"evolve schema -> id {new_sid}",
                 "schema_id": new_sid,
@@ -1009,9 +996,8 @@ class SnapshotTable:
             new_entry["schema_id"] = 0
             new_entry["schemas"] = {"0": schema_to_json(schema.struct, 0)}
             new_entry["manifest_schemas"] = {mname: 0}
-        # CAS publish: a concurrent writer advancing the log raises instead
-        # of the legacy last-write-wins replace (write() replaces the table
-        # CONTENT, but never someone else's commit)
+        # CAS publish: a concurrent writer advancing the log raises (write()
+        # replaces the table CONTENT, but never someone else's commit)
         self._commit(
             entries + [new_entry],
             expected_head=entries[-1]["version"] if entries else 0,
@@ -1053,7 +1039,7 @@ class SnapshotTable:
         """Move a staged parquet write's part files into the lineage dir,
         name-stamped with ``prefix`` (the data-sequence marker), preserving
         key=value subdirs. Per-file ``os.rename`` is atomic; the files stay
-        invisible until the snapshot-log commit because format-2 reads are
+        invisible until the snapshot-log commit because reads are
         manifest-list-based. Returns the files' lineage-relative paths."""
         import shutil
 
@@ -1151,15 +1137,13 @@ class SnapshotTable:
                     dest, stamped["rels"], stamped["v"], new_version
                 )
                 stamped["v"] = new_version
-            rels = stamped["rels"]
-            manifests = self._manifests_of(head)
-            mname = self._write_manifest_file(new_version, rels)
+            mname = self._write_manifest_file(new_version, stamped["rels"])
             new_entry = {
                 "version": new_version,
                 "data_dir": head["data_dir"],
                 "fmt": SNAPSHOT_FORMAT,
-                "manifests": manifests + [mname],
-                "base_seq": head.get("base_seq", head["version"]),
+                "manifests": head["manifests"] + [mname],
+                "base_seq": head["base_seq"],
                 # marks the lineage as multi-sequence: readers must compare
                 # per-file sequence numbers against delete sequences
                 # (append-free lineages keep the cheaper plain anti-join)
@@ -1192,14 +1176,13 @@ class SnapshotTable:
         new_entry = {
             "version": new_version,
             "data_dir": target["data_dir"],
-            "base_seq": target.get("base_seq", target["version"]),
+            "fmt": SNAPSHOT_FORMAT,
+            "manifests": list(target["manifests"]),
+            "base_seq": target["base_seq"],
             "rollback_of": int(version),
             "ts": time.time() if ts is None else ts,
             "note": note or f"rollback to v{version}",
         }
-        if target.get("manifests"):
-            new_entry["fmt"] = SNAPSHOT_FORMAT
-            new_entry["manifests"] = list(target["manifests"])
         if target.get("has_appends"):
             new_entry["has_appends"] = True
         if target.get("partition_by"):
@@ -1247,7 +1230,7 @@ class SnapshotTable:
         """Rename just-ingested (still-uncommitted, hence invisible) files
         from the provisional ``s{old_v}-`` sequence stamp to the final
         commit's ``s{new_v}-`` — O(new files) metadata renames inside the
-        commit lock. Without this, a commit renumbered past a concurrent
+        CAS retry loop. Without this, a commit renumbered past a concurrent
         equality delete would keep a sequence OLDER than that delete's,
         and the delete would silently erase rows that serialized after
         it."""
@@ -1307,7 +1290,7 @@ class SnapshotTable:
         cur = entries[-1]
 
         def _build(fresh: list[dict]) -> dict:
-            # CAS under the commit lock: a delete commit composes with
+            # CAS retry: a delete commit composes with
             # concurrent plain appends (it serializes after them — the
             # sequence stamp below is the FINAL commit's, so it applies to
             # everything strictly older, Iceberg's commit-time sequence
@@ -1335,7 +1318,9 @@ class SnapshotTable:
             new_entry = {
                 "version": new_version,
                 "data_dir": head["data_dir"],
-                "base_seq": head.get("base_seq", head["version"]),
+                "fmt": SNAPSHOT_FORMAT,
+                "manifests": list(head["manifests"]),
+                "base_seq": head["base_seq"],
                 **({"has_appends": True} if head.get("has_appends") else {}),
                 **({"partition_by": list(head["partition_by"])} if head.get("partition_by") else {}),
                 **({"sort_by": list(head["sort_by"])} if head.get("sort_by") else {}),
@@ -1343,9 +1328,6 @@ class SnapshotTable:
                 "ts": time.time() if ts is None else ts,
                 "note": note,
             }
-            if head.get("manifests"):
-                new_entry["fmt"] = SNAPSHOT_FORMAT
-                new_entry["manifests"] = list(head["manifests"])
             return self._carry_schema(new_entry, head)
 
         return self._commit_build(_build)
@@ -1406,12 +1388,8 @@ class SnapshotTable:
             shutil.rmtree(tmp, ignore_errors=True)
             return entries[-1]["version"]
         dd = self._claim_delete_dir(tmp, dd)
-        # paths stamp (ADVICE r9): recorded _file values are lineage-dir-
-        # relative; the reader REFUSES unstamped delete files whose paths
-        # look absolute (the pre-r9 scheme) instead of silently un-deleting.
         return self._append_delete_entry(
-            entries, {"dir": dd, "kind": "pos", "paths": "rel"},
-            note or "delete_where", ts,
+            entries, {"dir": dd, "kind": "pos"}, note or "delete_where", ts
         )
 
     def delete_by_key(
@@ -1565,7 +1543,7 @@ class SnapshotTable:
             if prev is not None
             else []
         )
-        delete = {"dir": dd, "kind": "dv", "paths": "rel"}
+        delete = {"dir": dd, "kind": "dv"}
         if chain:
             delete["supersedes"] = chain
         return self._append_delete_entry(entries, delete, note, ts)
@@ -1614,7 +1592,6 @@ class SnapshotTable:
         for d in deletes:
             dfile = spark.read.parquet(os.path.join(self.path, d["dir"]))
             if d["kind"] == "pos":
-                self._check_pos_delete_paths(d)
                 p = dfile.select("_file", "_pos")
             elif d["kind"] == "dv":
                 p = self._dv_pairs(spark, d)
@@ -1627,9 +1604,8 @@ class SnapshotTable:
                     on=list(d["cols"]),
                     how="semi",
                 )
-                dseq = d.get("seq")
-                if dseq is not None and multi_seq:
-                    hit = hit.filter(F.col("_seq") < F.lit(int(dseq)))
+                if multi_seq:
+                    hit = hit.filter(F.col("_seq") < F.lit(int(d["seq"])))
                 p = hit.select("_file", "_pos")
             pairs = p if pairs is None else pairs.unionByName(p)
         pairs = pairs.dropDuplicates(["_file", "_pos"])
@@ -1651,13 +1627,15 @@ class SnapshotTable:
             else []
         )
         version = cur["version"] + 1
-        delete = {"dir": dd, "kind": "dv", "paths": "rel", "seq": version}
+        delete = {"dir": dd, "kind": "dv", "seq": version}
         if chain:
             delete["supersedes"] = chain
         new_entry = {
             "version": version,
             "data_dir": cur["data_dir"],
-            "base_seq": cur.get("base_seq", cur["version"]),
+            "fmt": SNAPSHOT_FORMAT,
+            "manifests": list(cur["manifests"]),
+            "base_seq": cur["base_seq"],
             **({"has_appends": True} if cur.get("has_appends") else {}),
             **(
                 {"partition_by": list(cur["partition_by"])}
@@ -1671,42 +1649,11 @@ class SnapshotTable:
             "note": note
             or f"rewrite_delete_files: {len(deletes)} delete files -> 1 vector",
         }
-        if cur.get("manifests"):
-            new_entry["fmt"] = SNAPSHOT_FORMAT
-            new_entry["manifests"] = list(cur["manifests"])
         self._carry_schema(new_entry, cur)
         # folds replace the delete stack: never compose — CAS raises if a
         # writer advanced the log since the stack was read
         self._commit(entries + [new_entry], expected_head=cur["version"])
         return version
-
-    def _check_pos_delete_paths(self, d: dict) -> None:
-        """Refuse positional delete files recorded under the pre-r9
-        ABSOLUTE-path scheme (ADVICE r9): an unstamped delete whose first
-        ``_file`` value looks absolute would anti-join against nothing and
-        silently resurrect deleted rows. One KB-scale footer+page peek."""
-        if d.get("paths") == "rel":
-            return
-        import pyarrow.parquet as pq
-
-        ddir = os.path.join(self.path, d["dir"])
-        for root, _dirs, names in os.walk(ddir):
-            for fn in sorted(names):
-                if not fn.endswith(".parquet") or fn.startswith("_"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(root, fn))
-                if pf.metadata.num_rows == 0:
-                    continue
-                first = pf.read_row_group(0, columns=["_file"]).column(0)[0].as_py()
-                if first.startswith("/") or "://" in first:
-                    raise ValueError(
-                        f"positional delete file {d['dir']} records ABSOLUTE "
-                        "data-file paths (pre-relative-path format); rewrite "
-                        "it against the current layout or re-issue the "
-                        "delete — refusing to silently un-delete rows"
-                    )
-                return
-        return
 
     def _read_with_pos(
         self,
@@ -1719,13 +1666,13 @@ class SnapshotTable:
         files are broadcast (size-guarded by ``BROADCAST_DELETE_MAX_BYTES``);
         past the guard the strategy is left to AQE so a mass delete cannot
         force an oversized broadcast. ``files`` narrows the scan to a pruned
-        file subset (scan planning); without it, format-2 snapshots scan
-        exactly their manifest-listed files (crash orphans in the shared
-        lineage dir are invisible) and format-1 snapshots scan the dir."""
+        file subset (scan planning); without it, the scan reads exactly the
+        manifest-listed files (crash orphans in the shared lineage dir are
+        invisible)."""
         from pyspark.sql import functions as F
 
         data_dir = os.path.join(self.path, entry["data_dir"])
-        if files is None and entry.get("manifests"):
+        if files is None:
             files = self._entry_abs_files(entry)
 
         def _with_meta(sdf: DataFrame) -> DataFrame:
@@ -1752,9 +1699,7 @@ class SnapshotTable:
                 F.col("_metadata.row_index").alias("_pos"),
             )
 
-        rel_sids = (
-            self._rel_schema_map(entry) if files is not None else None
-        )
+        rel_sids = self._rel_schema_map(entry)
         if rel_sids is not None:
             # schema-tracked multi-generation lineage: scan and project
             # each generation to the entry's current schema by field id —
@@ -1762,19 +1707,17 @@ class SnapshotTable:
             df = self._union_generations(
                 spark, entry, files, data_dir, rel_sids, _with_meta
             )
-        elif files is not None:
+        else:
             # basePath keeps key=value partition columns discoverable when
             # scanning an explicit FILE LIST instead of the whole dir
             df = _with_meta(
                 spark.read.option("basePath", data_dir).parquet(*files)
             )
-        else:
-            df = _with_meta(spark.read.parquet(data_dir))
         # data sequence number per file: appended files carry it in their
         # s{seq}- name prefix; base files inherit the lineage base sequence.
         # Append-free lineages (the common case) skip the per-row regexp —
         # every file is base — and keep the plain anti-join below.
-        base_seq = int(entry.get("base_seq", 0))
+        base_seq = int(entry["base_seq"])
         multi_seq = bool(entry.get("has_appends"))
         if multi_seq:
             seq_str = F.regexp_extract(
@@ -1795,7 +1738,6 @@ class SnapshotTable:
                 BROADCAST_DELETE_MAX_BYTES
             )
             if d["kind"] == "pos":
-                self._check_pos_delete_paths(d)
                 right = F.broadcast(dfile) if small else dfile
                 df = df.join(right, on=["_file", "_pos"], how="anti")
             elif d["kind"] == "dv":
@@ -1810,10 +1752,9 @@ class SnapshotTable:
                 right = F.broadcast(pairs) if small else pairs
                 df = df.join(right, on=["_file", "_pos"], how="anti")
             elif d["kind"] == "eq":
-                dseq = d.get("seq")
-                if dseq is None or not multi_seq:
-                    # legacy log entry, or an append-free lineage where every
-                    # data file predates every delete: plain anti-join
+                if not multi_seq:
+                    # append-free lineage: every data file predates every
+                    # delete, so a plain anti-join
                     right = F.broadcast(dfile) if small else dfile
                     df = df.join(right, on=list(d["cols"]), how="anti")
                     continue
@@ -1828,7 +1769,7 @@ class SnapshotTable:
                 df = df.join(right, on=list(d["cols"]), how="left").filter(
                     ~(
                         F.coalesce(F.col(hit), F.lit(False))
-                        & (F.col("_seq") < F.lit(int(dseq)))
+                        & (F.col("_seq") < F.lit(int(d["seq"])))
                     )
                 ).drop(hit)
             else:  # pragma: no cover - manifest corruption
@@ -2001,20 +1942,17 @@ class SnapshotTable:
             )
         if scope != "deletes":
             raise ValueError(f"unknown scope {scope!r} (deletes|all)")
-        manifests = self._manifests_of(cur)
-        rel_files = self._entry_files({**cur, "manifests": manifests})
+        rel_files = self._entry_files(cur)
         data_dir = os.path.join(self.path, cur["data_dir"])
-        base_seq = int(cur.get("base_seq", cur["version"]))
+        base_seq = int(cur["base_seq"])
         affected: set[str] = set()
         for d in cur.get("deletes", []):
             if d["kind"] in ("pos", "dv"):
                 # both name their data files outright (a deletion vector's
                 # _file column is its per-file index)
-                if d["kind"] == "pos":
-                    self._check_pos_delete_paths(d)
                 affected |= self._pos_delete_files(d) & set(rel_files)
                 continue
-            dseq = int(d.get("seq") or 10**9)
+            dseq = int(d["seq"])
             key_bounds = self._dir_col_bounds(
                 os.path.join(self.path, d["dir"]), list(d["cols"])
             )
@@ -2141,10 +2079,7 @@ class SnapshotTable:
             return None
         cur = entries[-1]
         n_deletes = len(cur.get("deletes", ()))
-        if cur.get("manifests"):
-            n_commits = len(cur["manifests"])
-        else:
-            n_commits = cur["version"] - cur.get("base_seq", cur["version"])
+        n_commits = len(cur["manifests"])
         if n_deletes < max_delete_files and n_commits < max_commits:
             return None
         if delete_mode == "vector" and n_commits < max_commits:
@@ -2263,9 +2198,8 @@ class SnapshotTable:
         the fork point; both logs reference the SAME immutable data files,
         so the branch costs one JSON file, not a data copy. Divergent
         version numbers cannot collide on storage — data files are
-        UUID-named and every format-2 read is manifest-scoped (branching
-        therefore requires a format-2 head). ``write()`` (new lineage) is
-        not allowed on a branch."""
+        UUID-named and every read is manifest-scoped. ``write()`` (new
+        lineage) is not allowed on a branch."""
         if self.branch:
             raise ValueError("create branches from the main handle")
         if name == "main" or not self._BRANCH_RE.fullmatch(name):
@@ -2280,11 +2214,6 @@ class SnapshotTable:
         fork = [e for e in entries if e["version"] <= upto]
         if not fork:
             raise KeyError(f"no snapshot at or below v{upto}")
-        if not fork[-1].get("manifests"):
-            raise ValueError(
-                "branching requires a format-2 (manifest-list) head — "
-                "commit once on this layout first"
-            )
         # defensive: a crashed drop_branch can never leave commit files
         # without their checkpoint (it removes the tail first), but clear
         # any stale scope files regardless — they would splice a dead
@@ -2363,7 +2292,7 @@ class SnapshotTable:
         branch deletion vector (merged against branch-local state), or a
         replaced lineage — raises :class:`CommitConflict`: nothing is
         ever silently dropped. Each picked commit lands as its own main
-        commit under the CAS lock (so a conflict mid-sequence leaves the
+        commit through the CAS (so a conflict mid-sequence leaves the
         already-picked PREFIX applied — a consistent converged prefix,
         exactly as if only those branch commits had been picked; re-run
         after resolving to land the rest); the branch stays (drop it
@@ -2446,8 +2375,8 @@ class SnapshotTable:
         prev = base
         eq_delete_picked = False
         for e in picks:
-            pm = set(prev.get("manifests") or [])
-            own_m = [m for m in e.get("manifests", []) if m not in pm]
+            pm = set(prev["manifests"])
+            own_m = [m for m in e["manifests"] if m not in pm]
             sp = delete_stack_keys(prev)
             own_d = [d for d in e.get("deletes", []) if _key(d) not in sp]
             removed = sp - delete_stack_keys(e)
@@ -2504,7 +2433,7 @@ class SnapshotTable:
                 # deletes main already carries (shared history retention
                 # trimmed, or a re-run after a mid-sequence conflict)
                 # contributes nothing and must not double-list files
-                hm = set(head.get("manifests") or [])
+                hm = set(head["manifests"])
                 hk = delete_stack_keys(head)
                 own_m = [m for m in own_m if m not in hm]
                 own_d = [d for d in own_d if _key(d) not in hk]
@@ -2524,11 +2453,11 @@ class SnapshotTable:
                         if (
                             d.get("kind") == "eq"
                             and _key(d) not in base_keys
-                            and int(d.get("seq") or 0) > stamp
+                            and int(d["seq"]) > stamp
                         ):
                             raise CommitConflict(
                                 "main committed an equality delete (seq "
-                                f"{d.get('seq')}) after the fork that "
+                                f"{d['seq']}) after the fork that "
                                 "would wrongly apply to the picked files "
                                 f"(stamped s{stamp:05d}) — rebase by "
                                 "re-applying the branch changes via "
@@ -2539,8 +2468,8 @@ class SnapshotTable:
                     "version": nv,
                     "data_dir": head["data_dir"],
                     "fmt": SNAPSHOT_FORMAT,
-                    "manifests": self._manifests_of(head) + own_m,
-                    "base_seq": head.get("base_seq", head["version"]),
+                    "manifests": head["manifests"] + own_m,
+                    "base_seq": head["base_seq"],
                     "ts": time.time() if ts is None else ts,
                     "note": f"cherry-pick {name}@v{e['version']}: "
                     f"{e.get('note') or ''}".rstrip(": "),
@@ -2741,14 +2670,13 @@ class SnapshotTable:
             version = cur["version"] + 1
             dest = os.path.join(self.path, cur["data_dir"])
             new_rels = self._ingest_stage(staged, dest, f"s{version:05d}-")
-            manifests = self._manifests_of(cur)
             mname = self._write_manifest_file(version, new_rels)
             new_entry = {
                 "version": version,
                 "data_dir": cur["data_dir"],
                 "fmt": SNAPSHOT_FORMAT,
-                "manifests": manifests + [mname],
-                "base_seq": cur.get("base_seq", cur["version"]),
+                "manifests": cur["manifests"] + [mname],
+                "base_seq": cur["base_seq"],
                 "has_appends": True,
                 "ts": time.time() if ts is None else ts,
                 "note": note or f"publish {stage_id} (append)",
@@ -2823,30 +2751,22 @@ class SnapshotTable:
         deletes; here the manifest's stats are the parquet footers
         (`footer_stats.prune_files_multi` — conservative: a file without
         provable non-overlap is kept). The candidate set is the snapshot's
-        manifest-listed files (format 2) or its data dir (format 1).
-        ``where`` maps column → (lo, hi) range bounds, either bound None
-        for open-ended. ``eq`` maps column → exact value and prunes by the
+        manifest-listed files. ``where`` maps column → (lo, hi) range
+        bounds, either bound None for open-ended. ``eq`` maps column → exact value and prunes by the
         PER-FILE BLOOM FILTERS (:meth:`analyze_bloom`) — the point-lookup
         path where range bounds prune nothing; files a blob never saw
         (later appends, never-analyzed tables) are kept, so the plan is
         always conservative."""
         from iceberg_evolve_spark.sources.footer_stats import (
-            _files,
             prune_files_multi,
         )
 
         entry = self._resolve(version, as_of)
         data_path = os.path.join(self.path, entry["data_dir"])
-        files = (
-            self._entry_abs_files(entry) if entry.get("manifests") else None
-        )
-        rel_sids = (
-            self._rel_schema_map(entry)
-            if where and files is not None
-            else None
-        )
+        files = self._entry_abs_files(entry)
+        rel_sids = self._rel_schema_map(entry) if where else None
         if not where:
-            kept = list(files) if files is not None else _files(data_path)
+            kept = files
             total = len(kept)
         elif rel_sids is None:
             kept, total = prune_files_multi(data_path, where, files=files)
@@ -2982,8 +2902,6 @@ class SnapshotTable:
         from pyspark.sql import functions as F
 
         entry = self._resolve(version, as_of)
-        data_dir = os.path.join(self.path, entry["data_dir"])
-        files: list[str] | None = None
         if where or eq:
             files, _total = self.plan_scan(
                 version=entry["version"], where=where, eq=eq
@@ -2995,15 +2913,13 @@ class SnapshotTable:
                 return self._base_scan(spark, entry, all_files).filter(
                     F.lit(False)
                 )
-        elif entry.get("manifests"):
+        else:
             files = self._entry_abs_files(entry)
         if entry.get("deletes"):
             df = self._read_with_pos(spark, entry, files=files)
             df = df.drop("_file", "_pos", "_seq")
-        elif files is not None:
-            df = self._base_scan(spark, entry, files)
         else:
-            df = spark.read.parquet(data_dir)
+            df = self._base_scan(spark, entry, files)
         if where:
             for c, (lo, hi) in where.items():
                 if lo is not None:
@@ -3079,7 +2995,7 @@ class SnapshotTable:
         Cost: one JSON read per manifest — never touches data."""
         refcount: dict[str, int] = {}
         for e in self.versions():
-            for mname in e.get("manifests", []):
+            for mname in e["manifests"]:
                 refcount[mname] = refcount.get(mname, 0) + 1
         rows = []
         for name in sorted(os.listdir(self.path)):
@@ -3094,7 +3010,7 @@ class SnapshotTable:
             # reference shares the dir)
             total = 0
             for e in self.versions():
-                if name in e.get("manifests", []):
+                if name in e["manifests"]:
                     dd = os.path.join(self.path, e["data_dir"])
                     total = sum(
                         os.path.getsize(os.path.join(dd, rel))
@@ -3133,15 +3049,15 @@ class SnapshotTable:
         discipline as ``footer_stats.prune_files``).
 
         Cost: one footer read per file, driver-side — the planning-layer
-        price, never a data scan. Format-2 snapshots enumerate their
+        price, never a data scan. Data files are the snapshot's
         manifest-listed files (so crash orphans in the shared lineage dir
-        never appear); format-1 walks the dir. This is the relation a scan
-        planner joins against (file skipping = a filter on these bounds)."""
+        never appear). This is the relation a scan planner joins against
+        (file skipping = a filter on these bounds)."""
         import pyarrow.parquet as pq
 
         entry = self._resolve(version, as_of)
         stats_cols = stats_cols or []
-        base_seq = int(entry.get("base_seq", entry["version"]))
+        base_seq = int(entry["base_seq"])
 
         def _rows_for(
             rel_files: list[str],
@@ -3190,17 +3106,11 @@ class SnapshotTable:
                 )
             return out
 
-        if entry.get("manifests"):
-            data_rels = self._entry_files(entry)
-        else:
-            data_rels = _walk_rel_parquet(
-                os.path.join(self.path, entry["data_dir"])
-            )
-        rows = _rows_for(data_rels, entry["data_dir"], "data")
+        rows = _rows_for(self._entry_files(entry), entry["data_dir"], "data")
         for d in entry.get("deletes", []):
             drels = _walk_rel_parquet(os.path.join(self.path, d["dir"]))
             rows.extend(
-                _rows_for(drels, d["dir"], f"{d['kind']}-delete", d.get("seq"))
+                _rows_for(drels, d["dir"], f"{d['kind']}-delete", d["seq"])
             )
         bound_schema = "".join(
             f", {c}_lower string, {c}_upper string" for c in stats_cols
@@ -3423,20 +3333,14 @@ class SnapshotTable:
                 "data_dir": entry["data_dir"],
                 "version": int(entry["version"]),
                 "words": words_name,
-            }
-            if self.branch:
-                blob["branch"] = self.branch
-            if entry.get("manifests"):
                 # coverage = the analyzed entry's manifest-listed files,
                 # RECOMPUTED at probe time from the (immutable, retained-
                 # while-referenced) manifest files — never a driver-held
                 # list of every file
-                blob["manifests"] = sorted(entry["manifests"])
-            else:
-                # format-1 lineage (no manifests): walk once and persist
-                blob["covered"] = _walk_rel_parquet(
-                    os.path.join(self.path, entry["data_dir"])
-                )
+                "manifests": sorted(entry["manifests"]),
+            }
+            if self.branch:
+                blob["branch"] = self.branch
             # words parquet lands BEFORE the json that references it: a
             # crash in between leaves an orphan .words dir (swept by
             # expire_snapshots), never a blob pointing at nothing
@@ -3471,13 +3375,8 @@ class SnapshotTable:
         the analyzed entry's manifest names — or None when coverage can no
         longer be reconstructed (manifests expired), in which case the
         caller must keep every candidate (conservative, never wrong)."""
-        if "covered" in blob:
-            return set(blob["covered"])
-        mnames = blob.get("manifests")
-        if mnames is None:
-            return None
         covered: set[str] = set()
-        for mname in mnames:
+        for mname in blob["manifests"]:
             try:
                 with open(os.path.join(self.path, mname)) as fh:
                     covered.update(json.load(fh)["files"])
@@ -3568,10 +3467,7 @@ class SnapshotTable:
 
         entry = self._resolve(version, as_of)
         ddir = os.path.join(self.path, entry["data_dir"])
-        if entry.get("manifests"):
-            rels = self._entry_files(entry)
-        else:
-            rels = _walk_rel_parquet(ddir)
+        rels = self._entry_files(entry)
         n_files: dict[str, int] = defaultdict(int)
         n_rows: dict[str, int] = defaultdict(int)
         n_bytes: dict[str, int] = defaultdict(int)
@@ -3587,8 +3483,6 @@ class SnapshotTable:
             if d["kind"] == "eq":
                 n_eq += 1
                 continue
-            if d["kind"] == "pos":
-                self._check_pos_delete_paths(d)
             for root, _dirs, names in os.walk(os.path.join(self.path, d["dir"])):
                 for fn in names:
                     if not fn.endswith(".parquet") or fn.startswith("_"):
@@ -3677,7 +3571,7 @@ class SnapshotTable:
                 if e.get("rewrite"):
                     boundary = f"compaction rewrite at v{e['version']}"
                     break
-        if boundary is None and eto.get("base_seq") != efrom.get("base_seq"):
+        if boundary is None and eto["base_seq"] != efrom["base_seq"]:
             boundary = "full rewrite (new lineage) in range"
         old = {
             json.dumps(d, sort_keys=True)
@@ -3718,11 +3612,8 @@ class SnapshotTable:
                     "deletion vector replaced outside its supersede chain "
                     "(rollback)"
                 )
-        if (
-            boundary is None
-            and efrom.get("manifests")
-            and eto.get("manifests")
-            and not set(efrom["manifests"]) <= set(eto["manifests"])
+        if boundary is None and not set(efrom["manifests"]) <= set(
+            eto["manifests"]
         ):
             boundary = "manifest set shrank in range (rollback/rewrite)"
         if boundary is None and efrom.get("schema_id") != eto.get(
@@ -3839,7 +3730,7 @@ class SnapshotTable:
         * whole ``v``/``d`` dirs referenced by NO surviving entry;
         * individual parquet files inside a LIVE lineage dir that no
           surviving entry's manifests list (expired appends, crashed-append
-          orphans) — format-2 dirs are shared across snapshots, so files,
+          orphans) — lineage dirs are shared across snapshots, so files,
           not dirs, are the reclamation unit, exactly like Iceberg data
           files under a shared prefix;
         * manifest files (``m*.json``) no surviving entry references.
@@ -3896,21 +3787,18 @@ class SnapshotTable:
         branch_entries: list[dict] = [
             e for ents in branch_logs.values() for e in ents
         ]
-        live_dirs = {e["data_dir"] for e in keep}
+        live_dirs: set[str] = set()
         live_manifests: set[str] = set()
-        # per lineage dir: the union of surviving entries' file lists, or
-        # None when ANY surviving entry reads it by walk (format 1) — then
-        # the whole dir is live and per-file sweeping is off for it
-        live_rel: dict[str, set[str] | None] = {}
+        # per lineage dir: the union of surviving entries' file lists
+        live_rel: dict[str, set[str]] = {}
         for e in keep + branch_entries:
+            # a branch still reading an older lineage pins that dir too
+            live_dirs.add(e["data_dir"])
             live_dirs.update(d["dir"] for d in e.get("deletes", []))
-            if e.get("manifests"):
-                live_manifests.update(e["manifests"])
-                slot = live_rel.setdefault(e["data_dir"], set())
-                if slot is not None:
-                    slot.update(self._entry_files(e))
-            else:
-                live_rel[e["data_dir"]] = None
+            live_manifests.update(e["manifests"])
+            live_rel.setdefault(e["data_dir"], set()).update(
+                self._entry_files(e)
+            )
         removed = []
         # Sweep EVERY unreferenced dir/file, not just what this call
         # expired — a crash between a previous retention's log commit and
@@ -3950,7 +3838,7 @@ class SnapshotTable:
                     shutil.rmtree(full)
                     removed.append(name)
                 elif name == stem and live_rel.get(name):
-                    # live format-2 lineage dir: per-file sweep
+                    # live lineage dir: per-file sweep
                     live = live_rel[name]
                     for rel in _walk_rel_parquet(full):
                         fp = os.path.join(full, rel)

@@ -78,6 +78,11 @@ class TestMinimalMoves:
     def test_move_to_front(self):
         assert minimal_moves([1, 2, 3, 4], [4, 1, 2, 3]) == [4]
 
+    def test_two_moves_suffice(self):
+        # difflib's matcher (not a longest common subsequence) planned 3
+        # moves here; keeping 1 and 3 in place needs only 2
+        assert len(minimal_moves([0, 1, 2, 3], [2, 1, 3, 0])) == 2
+
 
 class TestUnionByName:
     def test_union_candidate_only_adds(self, users_current):

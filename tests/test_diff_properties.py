@@ -8,14 +8,17 @@ these properties pin the diff's algebraic behavior over arbitrary schemas:
    exactly one `removed`;
 3. rename detection — same ID, new name → exactly one `renamed` (never
    drop+add);
-4. move minimality — one displaced field → exactly one `moved`;
+4. move minimality — one displaced field → exactly one `moved`; any
+   permutation → n − LIS moves, which replayed in order give the new order;
 5. plan phase order — renames always precede adds/drops, moves come last.
 """
+
+from bisect import bisect_left
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from iceberg_evolve_spark.diff import SchemaDiff
+from iceberg_evolve_spark.diff import SchemaDiff, minimal_moves
 from iceberg_evolve_spark.model import Field, PrimitiveType, StructType
 
 PRIMS = ["string", "int", "long", "float", "double", "boolean", "date", "timestamp", "binary"]
@@ -97,6 +100,34 @@ def test_single_displacement_is_one_move(s, data):
     # "b first") — the LCS picks either; only the count is a property.
     assert len(moves) == 1
     assert not d.added and not d.removed
+
+
+def _lis_len(seq):
+    tails = []
+    for x in seq:
+        k = bisect_left(tails, x)
+        tails[k:k + 1] = [x]
+    return len(tails)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.permutations(list(range(9))).flatmap(
+    lambda p: st.integers(2, 9).map(lambda n: [x for x in p if x < n])
+), st.randoms(use_true_random=False))
+def test_minimal_moves_is_n_minus_lis(new, rnd):
+    orig = sorted(new)
+    rnd.shuffle(orig)
+    moves = minimal_moves(orig, new)
+    pos = {fid: i for i, fid in enumerate(new)}
+    assert len(moves) == len(new) - _lis_len([pos[f] for f in orig])
+    # replay each move as the diff describes it: after its predecessor in
+    # the new order, or first
+    cur = list(orig)
+    for fid in moves:
+        cur.remove(fid)
+        i = new.index(fid)
+        cur.insert(cur.index(new[i - 1]) + 1 if i else 0, fid)
+    assert cur == new
 
 
 @settings(max_examples=40, deadline=None)

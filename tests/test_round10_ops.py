@@ -146,43 +146,6 @@ class TestWapAppendPublish:
         assert 0 < len(kept) < total
 
 
-class TestPosDeletePathGuard:
-    def test_absolute_path_delete_files_are_refused(self, spark, tdir):
-        """ADVICE r9: pos-delete files recorded under the pre-r9 ABSOLUTE
-        path scheme must fail loudly, not silently resurrect rows."""
-        t = SnapshotTable(os.path.join(tdir, "t"))
-        t.write(spark.range(0, 10))
-        t.delete_where(spark, F.col("id") < 3)
-        entries = t.versions()
-        d = entries[-1]["deletes"][0]
-        # forge a legacy delete file: absolute paths, no "paths" stamp
-        ddir = os.path.join(t.path, d["dir"])
-        old = spark.read.parquet(ddir)
-        legacy = old.withColumn(
-            "_file", F.concat(F.lit(t.path + "/v00001/"), F.col("_file"))
-        ).select("_file", "_pos")
-        tmp = ddir + ".rewrite"
-        legacy.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(ddir)
-        os.rename(tmp, ddir)
-        del d["paths"]
-        t._commit(entries)
-        with pytest.raises(ValueError, match="ABSOLUTE"):
-            t.read(spark).count()
-
-    def test_unstamped_relative_paths_still_apply(self, spark, tdir):
-        """An unstamped delete file whose paths are relative (the r9 writer)
-        passes the peek and keeps working — the guard only rejects what is
-        provably broken."""
-        t = SnapshotTable(os.path.join(tdir, "t"))
-        t.write(spark.range(0, 10))
-        t.delete_where(spark, F.col("id") < 3)
-        entries = t.versions()
-        del entries[-1]["deletes"][0]["paths"]
-        t._commit(entries)
-        assert t.read(spark).count() == 7
-
-
 class TestCdcRetireStamp:
     def test_crash_between_commits_does_not_stack_deletes(self, spark, tdir):
         """ADVICE r9: a crash after the delete commit but before the append
@@ -201,13 +164,13 @@ class TestCdcRetireStamp:
         b1 = spark.createDataFrame(
             [(1, "u1", "u", 100), (2, None, "d", 101)], CDC_SCHEMA
         )
-        # simulate the crash window: run ONLY the delete commit by calling
-        # the real writer, then rolling the append commit back off the log
+        # simulate the crash window: run the real writer, then unlink the
+        # append's commit file — the state a crash before its link leaves
         writer(b1, 1)
         t = SnapshotTable(tbl)
         entries = t.versions()
         assert "append" in (entries[-1].get("note") or "")
-        t._commit(entries[:-1])  # crash: append commit lost
+        os.remove(t._commit_file(entries[-1]["version"]))
         n_delete_files = len(t.versions()[-1].get("deletes", []))
         writer(b1, 1)  # at-least-once replay
         t2 = SnapshotTable(tbl)
@@ -476,7 +439,7 @@ class TestStreamingMetadataBounds:
         t.expire_snapshots(keep_last=2)
         live = set()
         for e in t.versions():
-            live.update(t._entry_files(e) if e.get("manifests") else [])
+            live.update(t._entry_files(e))
         dd = os.path.join(t.path, t.versions()[-1]["data_dir"])
         on_disk = {
             os.path.relpath(os.path.join(r, n), dd)

@@ -314,7 +314,7 @@ class TestCommitCAS:
         with pytest.raises(CommitConflict, match="delete"):
             t._append_delete_entry(
                 stale_entries,
-                {"dir": "d99999", "kind": "dv", "paths": "rel"},
+                {"dir": "d99999", "kind": "dv"},
                 "loser", None,
             )
         # the winner's delete is intact
@@ -343,8 +343,8 @@ class TestCommitCAS:
                 "version": head["version"] + 1,
                 "data_dir": head["data_dir"],
                 "fmt": 2,
-                "manifests": t._manifests_of(head) + [mname],
-                "base_seq": head.get("base_seq", head["version"]),
+                "manifests": list(head["manifests"]) + [mname],
+                "base_seq": head["base_seq"],
                 "has_appends": True,
                 "deletes": list(head.get("deletes", [])),
                 "ts": 1.0,

@@ -38,8 +38,8 @@ def _meta_entry(t: SnapshotTable, head: dict, note: str) -> dict:
         "version": head["version"] + 1,
         "data_dir": head["data_dir"],
         "fmt": 2,
-        "manifests": t._manifests_of(head) + [mname],
-        "base_seq": head.get("base_seq", head["version"]),
+        "manifests": list(head["manifests"]) + [mname],
+        "base_seq": head["base_seq"],
         "ts": 1.0,
         "note": note,
     }

@@ -13,6 +13,7 @@ Kept deliberately small per example (Spark jobs are ~100 ms each) but wide
 in operation space; hypothesis shrinks failures to minimal op sequences.
 """
 
+import json
 import os
 import shutil
 import tempfile
@@ -22,7 +23,10 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from iceberg_evolve_spark.sources.snapshots import SnapshotTable
+from iceberg_evolve_spark.sources.snapshots import (
+    SNAPSHOT_FORMAT,
+    SnapshotTable,
+)
 
 # one op = (kind, int parameter); interpretation is kind-specific
 _OPS = st.lists(
@@ -40,6 +44,38 @@ _OPS = st.lists(
 
 def _rows(lo: int, hi: int) -> dict[int, int]:
     return {i: i % 5 for i in range(lo, hi)}
+
+
+def _assert_log_stamped(t: SnapshotTable) -> None:
+    """Every entry of main's log and of each branch log carries the stamps
+    the log's load check demands (readers index them directly)."""
+    logs = [t.versions()] + [
+        t.branch_table(name).versions() for name in t.branches()
+    ]
+    for log in logs:
+        for e in log:
+            assert e["fmt"] == SNAPSHOT_FORMAT, e
+            assert "manifests" in e and "base_seq" in e, e
+            assert all("seq" in d for d in e.get("deletes", [])), e
+
+
+@pytest.mark.parametrize("field", ["fmt", "manifests", "base_seq", "seq"])
+def test_unstamped_log_entry_is_refused(spark, tmp_path, field):
+    """A commit file missing any stamp fails where the log is loaded, and
+    so does every read through it, naming the version and the field."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.write(spark.range(3))
+    forged = dict(t.versions()[-1], version=2)
+    if field == "seq":
+        forged["deletes"] = [{"dir": "d00001", "kind": "eq", "cols": ["id"]}]
+    else:
+        del forged[field]
+    with open(t._commit_file(2), "w") as fh:
+        json.dump(forged, fh)
+    with pytest.raises(ValueError, match=f"v2 lacks .*{field}"):
+        t.versions()
+    with pytest.raises(ValueError, match=f"v2 lacks .*{field}"):
+        t.read(spark)
 
 
 @settings(
@@ -127,6 +163,7 @@ def test_random_op_sequences_match_model(spark, ops):
                     t.tag(name, v)
                     tagged.add(p)
             model[v] = cur
+            _assert_log_stamped(t)
 
             # invariant: every surviving modeled version reads exactly
             # its modeled rows (current and time travel alike)
@@ -222,7 +259,9 @@ def test_branch_cherry_pick_converges_to_model(spark, ops):
                     for i, g in mstate.items()
                     if not (cut <= i < cut + 3)
                 }
+            _assert_log_stamped(t)
         t.cherry_pick("audit")
+        _assert_log_stamped(t)
         expect = (
             # fork rows: survive iff neither side deleted them
             {

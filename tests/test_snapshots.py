@@ -118,9 +118,10 @@ class TestExpireSnapshots:
         t = SnapshotTable(str(tmp_path_factory.mktemp("expc") / "t"))
         for i in range(3):
             t.write(spark.range(0, i + 1).toDF("id"), ts=float(100 + i))
-        # simulate the crash window: manifest shrunk, dirs not yet removed
+        # simulate the crash window: retention's log install landed, dirs
+        # not yet removed
         entries = t.versions()
-        t._commit(entries[-1:])
+        t._install_checkpoint(entries[-1:])
         assert _os.path.isdir(_os.path.join(t.path, "v00001"))  # orphan
         # the next retention call reclaims the crash orphans even though
         # their manifest entries are already gone
@@ -128,6 +129,16 @@ class TestExpireSnapshots:
         assert expired == []
         assert {"v00001", "v00002"} <= set(removed)
         assert t.read(spark).count() == 3
+
+    def test_branch_pins_its_older_lineage(self, spark, tmp_path_factory):
+        t = SnapshotTable(str(tmp_path_factory.mktemp("expb") / "t"))
+        t.write(spark.range(5))
+        b = t.create_branch("audit")
+        t.write(spark.range(100, 103))  # main moves to a new lineage
+        expired, removed = t.expire_snapshots(keep_last=1)
+        assert expired == [1]
+        assert "v00001" not in removed  # the branch still reads it
+        assert b.read(spark).count() == 5
 
     def test_keep_last_validation(self, tmp_path_factory):
         t = SnapshotTable(str(tmp_path_factory.mktemp("expv") / "t"))
@@ -350,15 +361,7 @@ def test_files_df_walks_partitioned_layout(spark, tmp_path_factory):
     """files_df must see files nested under key=value partition dirs."""
     t = SnapshotTable(str(tmp_path_factory.mktemp("metap") / "t"))
     df = spark.range(40).withColumn("g", F.col("id") % 2)
-    entries = t.versions()
-    # write a partitioned layout through the same commit protocol
-    data_dir = "v00001"
-    final = os.path.join(t.path, data_dir)
-    df.repartition("g").write.partitionBy("g").parquet(final + ".tmp")
-    os.rename(final + ".tmp", final)
-    t._commit(
-        [{"version": 1, "data_dir": data_dir, "ts": 1.0, "note": None}]
-    )
+    t.write(df.repartition("g"), partition_by=["g"])
     files = t.files_df(spark).collect()
     assert sum(r["n_rows"] for r in files) == 40
     assert all("g=" in r["file"] for r in files)
